@@ -584,7 +584,14 @@ def main() -> None:
     # and the stderr_stack_frames==0 guarantee still applies
     spark = get_spark(
         app_name="cae-bench",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
+        extra_conf={
+            "spark.ui.showConsoleProgress": "false",
+            # no .checksum twin per streaming checkpoint commit/offset/
+            # state file: the streaming extras' floor is that per-batch
+            # commit I/O, and r15's timings (-7…-15% on the commit-heavy
+            # gates in order-swapped pairs) were taken without it
+            "spark.sql.streaming.checkpoint.fileChecksum.enabled": "false",
+        },
     )
 
     reg = registry()
@@ -778,10 +785,12 @@ def main() -> None:
         "runs_per_query": {"headline": N_RUNS_HEADLINE, "extra": N_RUNS_EXTRA},
         "cold": cold,
         "excluded": EXCLUDED,
-        # the heap the run actually used (r12 finding: 12g default GC
-        # pressure inflated late extras up to 6x once the surface grew
-        # past ~110 timed ops; official runs use 24g via the env knob)
-        "driver_mem": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g"),
+        # the heap the session actually got: get_spark derives it from
+        # the host's memory unless SPARK_GRAFT_DRIVER_MEM is set (r12
+        # finding: a 12g heap's GC pressure inflated late extras up to 6x
+        # once the surface grew past ~110 timed ops; official runs used
+        # 24g via the env knob)
+        "driver_mem": spark.sparkContext.getConf().get("spark.driver.memory", "1g"),
         "methodology": methodology,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "metric": "headline_total_runtime",

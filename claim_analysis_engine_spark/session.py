@@ -12,6 +12,49 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Generated-class cache size (spark.sql.codegen.cache.maxEntries, Spark's
+# default 100). Measured with perfbench's generators on 4 vCPU: the 11
+# dashboard panels, the forecast fan-out and both upload kinds compile 657
+# distinct classes over a reads warm-up, two data versions and three
+# uploads; with 100 entries LRU eviction made that 1,830 compiles (a
+# version's first views: 345 → 12, its 11 repeat views: 132 → 2). 2048
+# holds the working set three times over for about 5 MB more Metaspace.
+CODEGEN_CACHE_MAX_ENTRIES = 2048
+
+# Heap default: at most 12g, and never the whole host — each task slot
+# runs a Python worker (pandas/Arrow UDFs) beside the JVM, and the JVM
+# itself needs metaspace, code cache and direct buffers off the heap.
+DRIVER_MEM_CAP_MB = 12 * 1024
+PY_WORKER_RESERVE_MB = 512
+
+
+def _mem_total_mb(meminfo: str) -> int | None:
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) // 1024
+    except (OSError, ValueError, IndexError):
+        pass
+    return None
+
+
+def driver_memory(cpus: int, meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` for a session with ``cpus`` task slots.
+
+    ``SPARK_GRAFT_DRIVER_MEM`` wins when set. Otherwise three quarters of
+    what ``MemTotal`` leaves after one Python worker reserve per slot,
+    capped at 12g and never below a quarter of ``MemTotal``; 12g when
+    ``meminfo`` cannot be read."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    total = _mem_total_mb(meminfo)
+    if total is None:
+        return f"{DRIVER_MEM_CAP_MB}m"
+    heap = max(total // 4, (total - PY_WORKER_RESERVE_MB * cpus) * 3 // 4)
+    return f"{min(DRIVER_MEM_CAP_MB, heap)}m"
+
 
 def get_spark(
     app_name: str = "claim-analysis-engine-spark",
@@ -19,24 +62,27 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """Build (or reuse) the engine's session.
+
+    Static confs — ``spark.driver.memory`` (see ``driver_memory``) and
+    ``spark.sql.codegen.cache.maxEntries`` — only take effect when this
+    call launches the JVM; on an already-running JVM they are no-ops and
+    the running values stay."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = master or f"local[{cpus}]"
     shuffle = shuffle_partitions or cpus
     # Local mode runs every executor thread inside the DRIVER JVM, so
-    # spark.driver.memory is the entire heap 32 concurrent tasks share.
-    # The pyspark default (1g) leaves ~380 MB of execution memory for
-    # all of them — long bench runs OOM'd in spilling hash aggregates
-    # once the query count grew (round 8). Size it to the environment
-    # (local[32] / 128 GiB box); harmless when a real cluster manager
-    # overrides it. Only effective when this factory LAUNCHES the JVM —
-    # on an already-running session (driver harness) it's a no-op conf,
-    # which is fine: that harness sets its own heap.
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g")
+    # spark.driver.memory is the entire heap all concurrent tasks share.
+    # The pyspark default (1g) OOM'd spilling hash aggregates once the
+    # bench's query count grew (round 8); harmless when a real cluster
+    # manager overrides it.
+    mem = driver_memory(cpus)
 
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.driver.memory", mem)
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
         .config("spark.sql.shuffle.partitions", str(shuffle))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -54,21 +100,20 @@ def get_spark(
         # (tables._load_events converts). Set here so it never has to
         # flip mid-session.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # Streaming checkpoint file checksums (Spark 4.1 default: on)
-        # write a .checksum twin per commit/offset/state file — the
-        # streaming gates' floor is exactly this per-batch commit I/O,
-        # and disabling the twin reads 5–13% off the commit-heavy
-        # gates in order-swapped paired runs (r15). Local/HDFS-backed
-        # checkpoints already sit on a checksummed store, so the twin
-        # is duplicate protection here; deployments on object stores
-        # that want end-to-end corruption detection flip the env knob.
-        .config(
-            "spark.sql.streaming.checkpoint.fileChecksum.enabled",
-            os.environ.get("SPARK_GRAFT_STREAM_CKPT_CHECKSUM", "false"),
-        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_stats(spark: SparkSession) -> dict:
+    """JVM-wide generated-code compile totals since the JVM started:
+    ``compiles`` (Janino compiles, i.e. codegen cache misses, from
+    ``CodegenMetrics``) and ``compile_s`` (their summed wall time). Diff
+    two readings to count the misses of the work in between."""
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return {"compiles": int(compiles), "compile_s": nanos / 1e9}
